@@ -4,19 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.state.CommitLog
+
 /** Streaming feature-drift monitor — the [[Relational.psiDrift]] PSI
   * scorecard turned into an ingest-time loop (the reference's scheduled
   * monitoring jobs poll batch tables; a 100 TB pipeline wants the drift
   * score maintained INCREMENTALLY as micro-batches land, without
   * rescanning history).
   *
-  * Index layout at `path` (the [[Dedup.writeMinhashIndex]] atomic-commit
-  * protocol, single writer assumed):
+  * Tables at `path`, committed through [[graft.state.CommitLog]]
+  * (commit id `ref` = the reference itself, any other id = a committed
+  * micro-batch):
   *   - `bounds/`  — per-key reference `(keys…, _mn, _mx)` bin anchors
   *   - `ref/`     — per-key reference bin counts `(keys…, bin, c_ref)`
   *   - `cur/batch=<id>/` — one micro-batch's bin counts `(keys…, bin, c_cur)`
-  *   - `_commits/<id>`   — atomic visibility markers (`ref` = the
-  *     reference itself; anything else = a committed micro-batch)
   *
   * EQUIVALENCE CONTRACT (SystemSpec-pinned): after streaming batches
   * B₁..Bₙ, [[driftPsi]] ≡ `Relational.psiDrift(ref ∪ B₁ ∪ … ∪ Bₙ)`
@@ -32,33 +33,13 @@ object DriftMonitor {
 
   private val IdPattern = "[A-Za-z0-9_-]+"
 
-  private def indexFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Batch ids whose writes are committed (marker present). */
-  def committedBatches(spark: SparkSession, path: String): Seq[String] = {
-    val fs = indexFs(spark, path)
-    val d = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).filter(_.isFile).map(_.getPath.getName).toSeq
-  }
-
-  private def commit(spark: SparkSession, path: String, id: String): Unit = {
-    val fs = indexFs(spark, path)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_commits"))
-    // one atomic create = the commit point
-    fs.create(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"),
-      false).close()
-  }
-
   /** Anchor the monitor: per-key bin bounds + reference bin counts from
     * the fit-time slice (the scorecard convention — drift is measured
     * against where the model was fit). OVERWRITES `path`. Fails loudly
     * on a degenerate reference (min == max — [[Relational.psiDrift]]'s
     * guard: such a key would report ~0 drift on any shift). The
-    * reference becomes visible only with the `_commits/ref` marker, so
-    * a crash between the two table writes exposes nothing. */
+    * reference becomes visible only with its `ref` commit, so a crash
+    * between the two table writes exposes nothing. */
   def writeDriftReference(df: DataFrame, keys: Seq[String],
                           valueCol: String, path: String,
                           bins: Int = 10): Unit = {
@@ -79,7 +60,7 @@ object DriftMonitor {
         s"writeDriftReference: degenerate reference slice (min == max) for " +
           s"key(s) ${degenerate.mkString(", ")} — bins cannot resolve drift " +
           "there; widen the reference window or exclude these keys")
-      indexFs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+      CommitLog.reset(spark, path)
       bounds.write.parquet(s"$path/bounds")
     } finally bounds.unpersist()
     val anchored = spark.read.parquet(s"$path/bounds")
@@ -89,7 +70,7 @@ object DriftMonitor {
       .groupBy(keys.map(col) :+ bucket.as("bin"): _*)
       .agg(count(lit(1)).as("c_ref"))
       .write.parquet(s"$path/ref")
-    commit(spark, path, "ref")
+    CommitLog.commit(spark, path, "ref")
   }
 
   /** Count one micro-batch into the reference bins and commit the batch
@@ -103,7 +84,7 @@ object DriftMonitor {
     require(batchId.matches(IdPattern) && batchId != "ref",
       s"batchId must match $IdPattern and not be 'ref', got '$batchId'")
     val spark = batch.sparkSession
-    val committed = committedBatches(spark, path)
+    val committed = CommitLog.committed(spark, path)
     require(committed.contains("ref"),
       s"driftBatch: no committed reference at $path — " +
         "run writeDriftReference first")
@@ -118,43 +99,39 @@ object DriftMonitor {
       // overwrite: a torn earlier attempt of THIS batch (no marker yet)
       // is invisible to readers and safe to rewrite
       .write.mode("overwrite").parquet(s"$path/cur/batch=$batchId")
-    commit(spark, path, batchId)
+    CommitLog.commit(spark, path, batchId)
     true
   }
 
   /** PSI per key of everything streamed so far against the reference —
     * `(keys…, n_ref, n_cur, psi)`, the [[Relational.psiDrift]] output
     * shape. Reads ONLY the committed skinny count tables (uncommitted
-    * batch directories prune at the listing via the `batch` partition
-    * column); an empty monitor (no batches yet) reports the pure
-    * smoothing floor with `n_cur = 0`. */
+    * batch directories are never scanned); an empty monitor (no batches
+    * yet) reports the pure smoothing floor with `n_cur = 0`. */
   def driftPsi(spark: SparkSession, path: String, keys: Seq[String],
                bins: Int = 10): DataFrame = {
     require(bins > 0, s"bins must be positive, got $bins")
-    val committed = committedBatches(spark, path)
-    require(committed.contains("ref"),
+    require(CommitLog.committed(spark, path).contains("ref"),
       s"driftPsi: no committed reference at $path")
     val bounds = spark.read.parquet(s"$path/bounds")
     val ref = spark.read.parquet(s"$path/ref")
-    val batchIds = committed.filterNot(_ == "ref")
     val grid = bounds.select(keys.map(col) :+
       explode(sequence(lit(0L), lit(bins - 1L))).as("bin"): _*)
     val withRef = grid.join(ref, keys :+ "bin", "left")
-    val cells =
-      if (batchIds.isEmpty)
+    val cells = CommitLog.readLog(spark, path, "cur") match {
+      case None =>
         withRef.select(keys.map(col) :+ col("bin") :+
           coalesce(col("c_ref"), lit(0L)).as("c_ref") :+
           lit(0L).as("c_cur"): _*)
-      else {
-        val cur = spark.read.parquet(s"$path/cur")
-          .filter(col("batch").cast("string").isin(batchIds: _*))
+      case Some(batches) =>
+        val cur = batches
           .groupBy(keys.map(col) :+ col("bin"): _*)
           .agg(sum(col("c_cur")).as("c_cur"))
         withRef.join(cur, keys :+ "bin", "left")
           .select(keys.map(col) :+ col("bin") :+
             coalesce(col("c_ref"), lit(0L)).as("c_ref") :+
             coalesce(col("c_cur"), lit(0L)).as("c_cur"): _*)
-      }
+    }
     Relational.psiFromCells(cells, keys, bins)
   }
 
@@ -197,13 +174,13 @@ object DriftMonitor {
     * Scale shape: one keyed window pass over the batch + one keyed agg
     * + a key-sized full-outer carry merge — per-fold cost is O(batch)
     * plus O(keys), never O(history). Both returned frames are LAZILY
-    * localCheckpointed (r14): the shared window pass still materializes
-    * exactly once — inside the caller's FIRST action (in
-    * [[cusumBatch]], the scores write) instead of as its own scheduled
-    * job at fold time, one driver round-trip less per fold. The
-    * ordering guards therefore raise at first materialization, which in
-    * every batch/stream loop is still inside the fold's own
-    * foreachBatch body. */
+    * localCheckpointed (r14): the shared window pass materializes
+    * exactly once. The ordering guards raise in the first job that runs
+    * that pass. With adaptive execution on (the Spark 4 default) that
+    * job runs inside THIS call: checkpointing `carry2` executes its
+    * shuffle stage. With it off, the first action on `scored` or
+    * `carry2` raises. Inside [[cusumBatch]] both land before the
+    * commit, so a guard trip leaves no marker. */
   def cusumFold(carry: DataFrame, batch: DataFrame, keys: Seq[String],
                 tsCol: String, valueCol: String, tiebreakCol: String,
                 target: Double, slack: Double, threshold: Double,
@@ -276,25 +253,14 @@ object DriftMonitor {
     (scored, carry2)
   }
 
-  /** Committed CUSUM state versions (ascending batch ids) at
-    * `stateDir` — the [[MarketIncremental.committedVersions]] protocol
-    * on this module's own state layout. */
-  def committedCusumVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = indexFs(spark, stateDir)
-    val d = new org.apache.hadoop.fs.Path(s"$stateDir/_commits")
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).filter(_.isFile)
-      .map(_.getPath.getName.toLong).sorted.toSeq
-  }
-
   /** The `writeStream.foreachBatch` body for streaming CUSUM: fold the
     * micro-batch with [[cusumFold]] against the last committed carry,
-    * append the batch's scores to the permanent `scores/batch=<id>` log,
-    * version the carry under `v=<id>/carry`, commit atomically.
-    * Idempotent per `batchId` (at-least-once replays return the standing
-    * view without refolding — the statistic would double-count
-    * otherwise); crash between writes exposes nothing (no marker). Old
-    * carry versions GC down to the committed predecessor.
+    * append the batch's scores to the permanent `scores` log and version
+    * the carry — one [[graft.state.CommitLog.foldBatch]]. A replayed
+    * `batchId` returns the standing view without refolding (the
+    * statistic would double-count otherwise). A violating batch trips
+    * the [[cusumFold]] ordering guards during the fold or the `scores`
+    * write, so it raises here and leaves no commit marker.
     *
     * Returns [[cusumScores]] — everything scored so far. */
   def cusumBatch(spark: SparkSession, stateDir: String, batchId: Long,
@@ -302,35 +268,20 @@ object DriftMonitor {
                  valueCol: String, tiebreakCol: String, target: Double,
                  slack: Double, threshold: Double,
                  scale: Double = 1e6): DataFrame = {
-    val done = committedCusumVersions(spark, stateDir)
-    if (done.contains(batchId)) return cusumScores(spark, stateDir)
-    val carry = done.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v/carry")
-      case None => emptyCusumCarry(spark, keys)
-    }
-    val (scored, carry2) = cusumFold(carry, batch, keys, tsCol, valueCol,
-      tiebreakCol, target, slack, threshold, scale)
-    scored.write.mode("overwrite").parquet(s"$stateDir/scores/batch=$batchId")
-    carry2.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/carry")
-    val f = indexFs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
+    CommitLog.foldBatch(spark, stateDir, batchId) { prev =>
+      val (scored, carry2) = cusumFold(prev("carry", emptyCusumCarry(spark, keys)),
+        batch, keys, tsCol, valueCol, tiebreakCol, target, slack, threshold, scale)
+      CommitLog.Step(Seq("scores" -> scored), Seq("carry" -> carry2))
     }
     cusumScores(spark, stateDir)
   }
 
-  /** Every committed batch's CUSUM scores — the union of the
-    * `scores/batch=<id>` logs (uncommitted/torn batch dirs prune at the
-    * listing via the partition column). Row shape =
-    * [[Relational.cusumDetect]]'s. */
+  /** Every committed batch's CUSUM scores — the committed slices of the
+    * `scores` log (uncommitted/torn batch dirs are never read). Row
+    * shape = [[Relational.cusumDetect]]'s. */
   def cusumScores(spark: SparkSession, stateDir: String): DataFrame = {
-    val done = committedCusumVersions(spark, stateDir)
+    val done = CommitLog.readLog(spark, stateDir, "scores")
     require(done.nonEmpty, s"cusumScores: nothing committed at $stateDir")
-    spark.read.parquet(s"$stateDir/scores")
-      .filter(col("batch").isin(done: _*))
-      .drop("batch")
+    done.get
   }
 }

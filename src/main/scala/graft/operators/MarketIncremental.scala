@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.state.CommitLog
+
 /** Incremental market analytics — fold a new micro-batch of ticks into
   * standing volume-bar and triple-barrier state WITHOUT recomputing
   * history: the [[Relational.mergeSessions]] sufficient-statistics
@@ -325,103 +327,47 @@ object MarketIncremental {
 
   // ------------------------------------------------------------------
   // Persistent foreachBatch wiring: small versioned frontier state +
-  // append-only closed-bar/final-label logs, both governed by the
-  // `_commits` markers (the incremental-dedup idempotency pattern — a
-  // replayed batch id is a no-op, a torn write without its marker is
-  // invisible to readers).
+  // append-only closed-bar/final-label logs, committed through
+  // [[graft.state.CommitLog]] (layout, replay and GC rules live there).
   // ------------------------------------------------------------------
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-
-  /** Committed batch ids at `stateDir`, numerically ordered. */
-  def committedVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val d = new org.apache.hadoop.fs.Path(s"$stateDir/_commits")
-    val f = fs(spark, stateDir)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.map(_.getPath.getName.toLong).sorted
-  }
-
-  private def readState(spark: SparkSession, stateDir: String, cfg: Cfg)
-      : (DataFrame, DataFrame, DataFrame) =
-    committedVersions(spark, stateDir).lastOption match {
-      case None =>
-        (emptyBars(spark, cfg), emptyCarry(spark, cfg), emptyEntries(spark, cfg))
-      case Some(v) =>
-        (spark.read.parquet(s"$stateDir/v=$v/open_bars"),
-          spark.read.parquet(s"$stateDir/v=$v/carry"),
-          spark.read.parquet(s"$stateDir/v=$v/open_entries"))
-    }
-
-  /** Committed slices of an append-only log (`bars`/`labels`), empty
-    * frame when nothing committed yet. One multi-path scan (not a
-    * per-batch union — a long-running stream accumulates thousands of
-    * batch dirs and a thousand-way union plan would dwarf the data). */
-  private def readLog(spark: SparkSession, stateDir: String, log: String,
-                      empty: DataFrame): DataFrame = {
-    val committed = committedVersions(spark, stateDir)
-    val existing = committed.filter(v =>
-      fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(s"$stateDir/$log/batch=$v")))
-    if (existing.isEmpty) empty
-    else spark.read.parquet(
-      existing.map(v => s"$stateDir/$log/batch=$v"): _*)
-  }
 
   /** All bars so far: the closed log plus the open frontier —
     * column-identical to [[Resample.volumeBars]] over the history
     * (timestamps as epoch-µs). */
-  def barsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame = {
-    val (open, _, _) = readState(spark, stateDir, cfg)
-    readLog(spark, stateDir, "bars", emptyBars(spark, cfg)).unionByName(open)
+  def barsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame =
+    CommitLog.readLog(spark, stateDir, "bars").getOrElse(emptyBars(spark, cfg))
+      .unionByName(CommitLog.latest(spark, stateDir)("open_bars", emptyBars(spark, cfg)))
       .drop("open_tb", "close_tb") // internal election state, not a bar column
-  }
 
   /** All labels so far: finalized log plus the open entries projected
     * through the label rule — column-identical to
     * [[Labeling.tripleBarrier]] over the history. */
-  def labelsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame = {
-    val (_, _, open) = readState(spark, stateDir, cfg)
-    labels(readLog(spark, stateDir, "labels", emptyEntries(spark, cfg))
-      .unionByName(open), cfg)
-  }
+  def labelsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame =
+    labels(CommitLog.readLog(spark, stateDir, "labels").getOrElse(emptyEntries(spark, cfg))
+      .unionByName(CommitLog.latest(spark, stateDir)("open_entries", emptyEntries(spark, cfg))),
+      cfg)
 
   /** The foreachBatch body: fold `batch` into the state at `stateDir`
-    * under batch id `batchId` (replay-idempotent), appending newly
-    * closed bars / final entries to their logs and persisting the small
-    * open frontier. Superseded frontier versions older than the
-    * previous one are dropped (two survivors: crash-safe rollback);
-    * the logs only ever grow. Returns the post-fold label view.
+    * under batch id `batchId`, appending newly closed bars / final
+    * entries to their logs and persisting the small open frontier —
+    * one [[graft.state.CommitLog.foldBatch]] (replay no-op, frontier
+    * GC, permanent logs). Returns the post-fold label view.
     *
     * Book SNAPSHOTS are deliberately a SIBLING state machine
     * ([[bookSnapshotBatch]]), not a third log here: the L2 delta feed
     * `(side, price, amount)` and the trade feed `(price, volume)` are
     * distinct upstreams with independent watermarks — coupling them in
     * one commit cycle would stall snapshot finality on trade-batch
-    * cadence (and vice versa). Same `_commits` idempotency, same
-    * frontier discipline, separate stateDir. */
+    * cadence (and vice versa). Same commit log, separate stateDir. */
   def marketTickBatch(spark: SparkSession, stateDir: String, batchId: Long,
                       batch: DataFrame, cfg: Cfg): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return labelsView(spark, stateDir, cfg)
-    val (open0, carry0, entries0) = readState(spark, stateDir, cfg)
-    val (closed, open1, carry1) = volumeBarsFold(open0, carry0, batch, cfg)
-    val (finals, entries1) = tripleBarrierFold(entries0, batch, carry1, cfg)
-    val v = s"$stateDir/v=$batchId"
-    closed.write.mode("overwrite").parquet(s"$stateDir/bars/batch=$batchId")
-    finals.write.mode("overwrite").parquet(s"$stateDir/labels/batch=$batchId")
-    open1.write.mode("overwrite").parquet(s"$v/open_bars")
-    carry1.write.mode("overwrite").parquet(s"$v/carry")
-    entries1.write.mode("overwrite").parquet(s"$v/open_entries")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    // GC: keep the committed predecessor frontier for rollback, drop
-    // older ones; the bars/labels logs are permanent
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
+    CommitLog.foldBatch(spark, stateDir, batchId) { prev =>
+      val (closed, open1, carry1) = volumeBarsFold(prev("open_bars", emptyBars(spark, cfg)),
+        prev("carry", emptyCarry(spark, cfg)), batch, cfg)
+      val (finals, entries1) = tripleBarrierFold(
+        prev("open_entries", emptyEntries(spark, cfg)), batch, carry1, cfg)
+      CommitLog.Step(Seq("bars" -> closed, "labels" -> finals),
+        Seq("open_bars" -> open1, "carry" -> carry1, "open_entries" -> entries1))
     }
     labelsView(spark, stateDir, cfg)
   }
@@ -746,47 +692,28 @@ object MarketIncremental {
         col("level"), col("price"), col("amount")): _*)
   }
 
-  private def readBookState(spark: SparkSession, stateDir: String, cfg: BookCfg)
-      : (DataFrame, DataFrame) =
-    committedVersions(spark, stateDir).lastOption match {
-      case None => (emptyBook(spark, cfg), emptyBookCursor(spark, cfg))
-      case Some(v) =>
-        (spark.read.parquet(s"$stateDir/v=$v/book"),
-          spark.read.parquet(s"$stateDir/v=$v/cursor"))
-    }
-
   /** All snapshots so far: the final log plus the provisional tail —
     * column-identical to the one-shot
     * [[graft.features.OrderbookFeatures.bookSnapshots]] over the full
     * delta history. */
   def snapshotsView(spark: SparkSession, stateDir: String, cfg: BookCfg): DataFrame = {
-    val (book, cursor) = readBookState(spark, stateDir, cfg)
-    readLog(spark, stateDir, "snapshots", emptySnapshots(spark, cfg))
-      .unionByName(provisionalSnapshots(book, cursor, cfg))
+    val front = CommitLog.latest(spark, stateDir)
+    CommitLog.readLog(spark, stateDir, "snapshots").getOrElse(emptySnapshots(spark, cfg))
+      .unionByName(provisionalSnapshots(front("book", emptyBook(spark, cfg)),
+        front("cursor", emptyBookCursor(spark, cfg)), cfg))
   }
 
   /** The foreachBatch body for a streamed L2 delta feed: fold `batch`
-    * into the book state at `stateDir` under `batchId`
-    * (replay-idempotent via `_commits`), append newly-final snapshots
-    * to the log, persist the small frontier. Same lifecycle as
-    * [[marketTickBatch]]: two frontier versions survive for rollback,
-    * the log only grows. Returns the post-fold snapshot view. */
+    * into the book state at `stateDir` under `batchId`, append
+    * newly-final snapshots to the log, persist the small frontier. Same
+    * lifecycle as [[marketTickBatch]]. Returns the post-fold snapshot
+    * view. */
   def bookSnapshotBatch(spark: SparkSession, stateDir: String, batchId: Long,
                         batch: DataFrame, cfg: BookCfg): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return snapshotsView(spark, stateDir, cfg)
-    val (book0, cursor0) = readBookState(spark, stateDir, cfg)
-    val (snaps, book1, cursor1) = bookSnapshotFold(book0, cursor0, batch, cfg)
-    val v = s"$stateDir/v=$batchId"
-    snaps.write.mode("overwrite").parquet(s"$stateDir/snapshots/batch=$batchId")
-    book1.write.mode("overwrite").parquet(s"$v/book")
-    cursor1.write.mode("overwrite").parquet(s"$v/cursor")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
+    CommitLog.foldBatch(spark, stateDir, batchId) { prev =>
+      val (snaps, book1, cursor1) = bookSnapshotFold(prev("book", emptyBook(spark, cfg)),
+        prev("cursor", emptyBookCursor(spark, cfg)), batch, cfg)
+      CommitLog.Step(Seq("snapshots" -> snaps), Seq("book" -> book1, "cursor" -> cursor1))
     }
     snapshotsView(spark, stateDir, cfg)
   }
@@ -1091,41 +1018,24 @@ object MarketIncremental {
     (feat, carry2)
   }
 
-  private def readFeatCarry(spark: SparkSession, stateDir: String, cfg: FeatCfg)
-      : DataFrame =
-    committedVersions(spark, stateDir).lastOption match {
-      case None => emptyFeatCarry(spark, cfg)
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v/carry")
-    }
-
   /** All features so far — column-identical to
     * [[graft.features.MarketFeatures.build]] over the full history
     * (modulo the key/column order; every emitted row is final). */
   def featuresView(spark: SparkSession, stateDir: String, cfg: FeatCfg): DataFrame =
-    readLog(spark, stateDir, "features", emptyFeatures(spark, cfg))
+    CommitLog.readLog(spark, stateDir, "features").getOrElse(emptyFeatures(spark, cfg))
 
   /** The foreachBatch body for a streamed OHLCV feed: fold `batch` into
-    * the feature state at `stateDir` under `batchId` (replay-idempotent
-    * via `_commits`), append the batch's final features to the log,
-    * persist the ≤19-row-per-series carry. Same lifecycle as
-    * [[marketTickBatch]]: two carry versions survive for rollback, the
-    * log only grows. Returns the post-fold feature view. */
+    * the feature state at `stateDir` under `batchId`, append the batch's
+    * final features to the log, persist the ≤19-row-per-series carry.
+    * Same lifecycle as [[marketTickBatch]]. Returns the post-fold
+    * feature view. */
   def marketFeaturesBatch(spark: SparkSession, stateDir: String, batchId: Long,
                           batch: DataFrame, cfg: FeatCfg,
                           dropnaFinal: Boolean = true): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return featuresView(spark, stateDir, cfg)
-    val carry0 = readFeatCarry(spark, stateDir, cfg)
-    val (feat, carry1) = marketFeaturesFold(carry0, batch, cfg, dropnaFinal)
-    val v = s"$stateDir/v=$batchId"
-    feat.write.mode("overwrite").parquet(s"$stateDir/features/batch=$batchId")
-    carry1.write.mode("overwrite").parquet(s"$v/carry")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
+    CommitLog.foldBatch(spark, stateDir, batchId) { prev =>
+      val (feat, carry1) = marketFeaturesFold(
+        prev("carry", emptyFeatCarry(spark, cfg)), batch, cfg, dropnaFinal)
+      CommitLog.Step(Seq("features" -> feat), Seq("carry" -> carry1))
     }
     featuresView(spark, stateDir, cfg)
   }
@@ -1257,38 +1167,20 @@ object MarketIncremental {
     (sizes, carry2)
   }
 
-  private def readBetCarry(spark: SparkSession, stateDir: String, cfg: BetCfg)
-      : DataFrame =
-    committedVersions(spark, stateDir).lastOption match {
-      case None => emptyBetCarry(spark, cfg)
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v/carry")
-    }
-
   /** All bet-size rows so far — column-identical to
     * [[graft.operators.Backtest.betSizing]] over the full bet history. */
   def sizesView(spark: SparkSession, stateDir: String, cfg: BetCfg): DataFrame =
-    readLog(spark, stateDir, "sizes", emptySizes(spark, cfg))
+    CommitLog.readLog(spark, stateDir, "sizes").getOrElse(emptySizes(spark, cfg))
 
   /** The foreachBatch body for a streamed bet feed: fold `batch` into
-    * the sizing state at `stateDir` under `batchId` (replay-idempotent
-    * via `_commits`), append the final instants to the log, persist the
-    * open-frontier carry. Same lifecycle as [[marketFeaturesBatch]]:
-    * two carry versions survive for rollback, the log only grows. */
+    * the sizing state at `stateDir` under `batchId`, append the final
+    * instants to the log, persist the open-frontier carry. Same
+    * lifecycle as [[marketTickBatch]]. */
   def betSizingBatch(spark: SparkSession, stateDir: String, batchId: Long,
                      batch: DataFrame, cfg: BetCfg): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return sizesView(spark, stateDir, cfg)
-    val carry0 = readBetCarry(spark, stateDir, cfg)
-    val (sizes, carry1) = betSizingFold(carry0, batch, cfg)
-    val v = s"$stateDir/v=$batchId"
-    sizes.write.mode("overwrite").parquet(s"$stateDir/sizes/batch=$batchId")
-    carry1.write.mode("overwrite").parquet(s"$v/carry")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
+    CommitLog.foldBatch(spark, stateDir, batchId) { prev =>
+      val (sizes, carry1) = betSizingFold(prev("carry", emptyBetCarry(spark, cfg)), batch, cfg)
+      CommitLog.Step(Seq("sizes" -> sizes), Seq("carry" -> carry1))
     }
     sizesView(spark, stateDir, cfg)
   }

@@ -76,8 +76,8 @@ class FeatureStore(spark: SparkSession, basePath: String) {
     * while a logically newer write of the same keys must carry a
     * strictly larger one. A wall-clock default here made replays
     * non-idempotent by default (round-8 verdict), violating the
-    * `_commits` idempotency doctrine every other stateful operator
-    * follows. */
+    * replay idempotency every other stateful operator gets from
+    * [[graft.state.CommitLog]]. */
   def upsert(df: DataFrame, domain: String, writeSeq: Long): Unit = {
     val incoming = prepare(df, domain, writeSeq)
     val merged =

@@ -698,7 +698,7 @@ class OpsSpec extends SparkSpec {
     // replayed batch id is a committed no-op
     assert(!Dedup.writeContainmentIndex(old, "text", "doc_id", dir,
       mode = "append", batchId = "0"))
-    assert(Dedup.committedBatches(spark, dir) == Seq("0"))
+    assert(graft.state.CommitLog.committed(spark, dir) == Seq("0"))
     // appending the batch then probing fresh content still works (the
     // nearDupAgainstIndex loop shape)
     assert(Dedup.writeContainmentIndex(batch2, "text", "doc_id", dir,
@@ -710,7 +710,7 @@ class OpsSpec extends SparkSpec {
     // compaction consolidates both batches atomically; probes are
     // row-identical and the replay ledger is carried transitively
     assert(Dedup.compactContainmentIndex(spark, dir) == 2)
-    assert(Dedup.committedBatches(spark, dir) == Seq("c0"))
+    assert(graft.state.CommitLog.committed(spark, dir) == Seq("c0"))
     val probe3 = pairsOf(Dedup.containmentAgainstIndex(spark, dir,
       batch2.union(Seq((2000L, excerpt(60))).toDF("doc_id", "text"))
         .where(col("doc_id") === 2000L),
@@ -863,7 +863,7 @@ class OpsSpec extends SparkSpec {
       s"each batch's doc must be probeable pre-compaction: $hitsBefore")
     // consolidate
     assert(Dedup.compactMinhashIndex(spark, dir) == 5)
-    assert(Dedup.committedBatches(spark, dir) == Seq("c0"))
+    assert(graft.state.CommitLog.committed(spark, dir) == Seq("c0"))
     assert(postingsFiles() < filesBefore,
       s"compaction must collapse files: $filesBefore -> ${postingsFiles()}")
     assert((0 until 5).map(probe) == hitsBefore, "probe results must be row-identical")
@@ -877,7 +877,7 @@ class OpsSpec extends SparkSpec {
     assert(probe(9) == Set(9L) && probe(2) == Set(2L))
     // second compaction consolidates {c0, 5} and stays probe-identical
     assert(Dedup.compactMinhashIndex(spark, dir) == 2)
-    assert(Dedup.committedBatches(spark, dir) == Seq("c1"))
+    assert(graft.state.CommitLog.committed(spark, dir) == Seq("c1"))
     assert(probe(9) == Set(9L) && probe(2) == Set(2L))
     // nothing left to consolidate
     assert(Dedup.compactMinhashIndex(spark, dir) == 0)
@@ -2298,7 +2298,7 @@ class OpsSpec extends SparkSpec {
       s"rebuild must restore recall, got $restored (was $driftedRecall)")
     // post-rebuild: single consolidated generation, no rows lost, and a
     // healthy monitor pass leaves it alone
-    assert(Similarity.ivfCommittedBatches(spark, dir) == Seq("0"))
+    assert(graft.state.CommitLog.committed(spark, dir) == Seq("0"))
     assert(spark.read.parquet(s"$dir/vectors").count() == 800)
     val (_, rebuilt2) = Similarity.rebuildIvfPqIndexIfDrifted(spark, dir,
       minRecall = 0.9, nQueries = 32, k = 5, nProbe = 2, rerank = 20)
@@ -2328,7 +2328,7 @@ class OpsSpec extends SparkSpec {
     // replay of the same batch id: no-op, no double rows
     assert(!Similarity.appendToIvfPqIndex(planted, "embedding", "vec_id",
       s"$dir/idx", batchId = "1"), "replay must skip")
-    val committed = Similarity.ivfCommittedBatches(spark, s"$dir/idx")
+    val committed = graft.state.CommitLog.committed(spark, s"$dir/idx")
     assert(committed == Seq("0", "1"), s"unexpected commit set: $committed")
     // torn append: batch directory on disk but no commit marker → invisible
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -2344,7 +2344,7 @@ class OpsSpec extends SparkSpec {
     // a rebuild clears the old generation: no stale batches survive
     Similarity.writeIvfPqIndex(base, "embedding", "vec_id", s"$dir/idx",
       nCells = 4, m = 4, ksub = 8, iters = 1)
-    assert(Similarity.ivfCommittedBatches(spark, s"$dir/idx") == Seq("0"))
+    assert(graft.state.CommitLog.committed(spark, s"$dir/idx") == Seq("0"))
     assert(top1 != 900L, "rebuilt index must not contain the old append")
   }
 
@@ -2433,7 +2433,7 @@ class OpsSpec extends SparkSpec {
         batch, "embedding", "vec_id", batchId = "b1", tau = 0.95, kBatch = 1)
       .collect().map(_.getLong(0)).toSet
     assert(s2 == s1, s"replay must return the same survivors: $s2 vs $s1")
-    val committed = Similarity.ivfCommittedBatches(spark, s"$dir/idx")
+    val committed = graft.state.CommitLog.committed(spark, s"$dir/idx")
     assert(committed == Seq("0", "b1"), s"unexpected commits: $committed")
   }
 
@@ -2506,7 +2506,7 @@ class OpsSpec extends SparkSpec {
     val before = probe()
     assert(Similarity.compactIvfPqIndex(spark, s"$dir/idx") == 3)
     assert(probe() == before, "compaction must be probe-invisible")
-    assert(Similarity.ivfCommittedBatches(spark, s"$dir/idx") == Seq("c0"))
+    assert(graft.state.CommitLog.committed(spark, s"$dir/idx") == Seq("c0"))
     // the consolidated dir is the only batch dir left on disk
     val dirs = new java.io.File(s"$dir/idx/vectors").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
@@ -3415,7 +3415,7 @@ class OpsSpec extends SparkSpec {
     val n1 = MarketIncremental.featuresView(spark, dir, cfg).count()
     MarketIncremental.marketFeaturesBatch(spark, dir, 1L,
       ohlcv.where(col("t") > 30), cfg)
-    assert(MarketIncremental.committedVersions(spark, dir) == Seq(0L, 1L))
+    assert(graft.state.CommitLog.versions(spark, dir) == Seq(0L, 1L))
     assert(MarketIncremental.featuresView(spark, dir, cfg).count() == n1)
     def key(r: org.apache.spark.sql.Row) = r.toSeq.map(String.valueOf(_)).mkString("|")
     val want = MarketFeatures.build(ohlcv)

@@ -1182,14 +1182,14 @@ class SystemSpec extends SparkSpec {
     // batch 0: three docs, one an in-batch dup
     drop("b0.json", Seq((1L, 1), (2L, 2), (3L, 1)))
     assert(runOnce() == Seq(1L, 2L), "in-batch dup must drop")
-    assert(graft.operators.Dedup.committedBatches(spark, idx) == Seq("0"))
+    assert(graft.state.CommitLog.committed(spark, idx) == Seq("0"))
     // batch 1 arrives; the SAME checkpoint resumes and assigns id 1
     drop("b1.json", Seq((10L, 2), (11L, 9)))
     assert(runOnce() == Seq(11L), "cross-batch dup must drop on resume")
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.state.CommitLog.committed(spark, idx).sorted == Seq("0", "1"))
     // nothing new → no batch, no index growth
     assert(runOnce() == Seq.empty)
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.state.CommitLog.committed(spark, idx).sorted == Seq("0", "1"))
   }
 
   test("streaming containment dedup end-to-end: excerpts drop, twins keep lower id, checkpoint resume, compaction-stable") {
@@ -1227,15 +1227,15 @@ class SystemSpec extends SparkSpec {
     // independent article 3
     drop("b0.json", Seq((1L, article(1)), (2L, excerpt(1)), (3L, article(3))))
     assert(runOnce() == Seq(1L, 3L), "in-batch excerpt must drop")
-    assert(graft.operators.Dedup.committedBatches(spark, idx) == Seq("0"))
+    assert(graft.state.CommitLog.committed(spark, idx) == Seq("0"))
     // batch 1 on the SAME checkpoint: an excerpt of the INDEXED article
     // drops via the probe; near-equal twins keep the lower id
     drop("b1.json", Seq((10L, excerpt(3)), (11L, article(7)), (12L, article(7))))
     assert(runOnce() == Seq(11L), "indexed-article excerpt + twin must drop on resume")
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.state.CommitLog.committed(spark, idx).sorted == Seq("0", "1"))
     // nothing new → no batch, no index growth
     assert(runOnce() == Seq.empty)
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.state.CommitLog.committed(spark, idx).sorted == Seq("0", "1"))
     // compaction keeps the loop behavior identical
     assert(graft.operators.Dedup.compactContainmentIndex(spark, idx) == 2)
     drop("b2.json", Seq((20L, excerpt(7)), (21L, article(9))))
@@ -1285,7 +1285,7 @@ class SystemSpec extends SparkSpec {
       (0 until 40).map(i => ("B", (i * 13 % 100).toDouble))
     drop("b1.json", b1)
     runOnce()
-    assert(DriftMonitor.committedBatches(spark, idx).sorted ==
+    assert(graft.state.CommitLog.committed(spark, idx).sorted ==
       Seq("0", "1", "ref"))
     // EQUIVALENCE: incremental PSI == one-shot batch psiDrift over the
     // union, column for column (shared bucket + smoothing trees)
@@ -1352,14 +1352,14 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 0 until 25)
     runOnce()
-    assert(DriftMonitor.committedCusumVersions(spark, st) == Seq(0L))
+    assert(graft.state.CommitLog.versions(spark, st) == Seq(0L))
     // resume from checkpoint in a "new run": only the new file folds
     drop("b1.json", 25 until 70)
     runOnce()
-    assert(DriftMonitor.committedCusumVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     // empty trigger → no batch, no version
     runOnce()
-    assert(DriftMonitor.committedCusumVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     // streamed scores ≡ one-shot detector over everything
     val all = (for (k <- Seq("A", "B"); t <- 0 until 70) yield
       (k, t.toLong, value(k, t))).toDF("k", "t", "v")
@@ -1426,13 +1426,13 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 1 to 30)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st) == Seq(0L))
+    assert(graft.state.CommitLog.versions(spark, st) == Seq(0L))
     drop("b1.json", 31 to 60)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     // nothing new → no batch fires, no state version appears
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     // the standing view now equals a from-scratch batch computation
     val all = (for (k <- Seq("A", "B"); t <- 1 to 60) yield
       (k, t.toLong, price(k, t), 1.0 + t % 3))
@@ -1448,7 +1448,7 @@ class SystemSpec extends SparkSpec {
     assert(MarketIncremental.barsView(spark, st, cfg).count() == wantBars)
     // the frontier stays small: open bars <= one per series, and the
     // label log holds the finalized entries permanently
-    val v = MarketIncremental.committedVersions(spark, st).last
+    val v = graft.state.CommitLog.versions(spark, st).last
     assert(spark.read.parquet(s"$st/v=$v/open_bars").count() <= 2)
     assert(spark.read.parquet(s"$st/labels").count() > 0)
   }
@@ -1497,14 +1497,14 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 1 to 40)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st) == Seq(0L))
+    assert(graft.state.CommitLog.versions(spark, st) == Seq(0L))
     // the SAME checkpoint resumes; only the new file folds as batch 1
     drop("b1.json", 41 to 100)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     // empty trigger → no batch, no version
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     // streamed view ≡ one-shot build, BIT-identical doubles
     val all = ohlcv((for (s <- Seq("S1", "S2"); t <- 1 to 100) yield
       (s, t.toLong, close(s, t))).toDF("s", "t", "c"))
@@ -1525,7 +1525,7 @@ class SystemSpec extends SparkSpec {
       ohlcv(Seq(("S1", 1L, 50.0)).toDF("s", "t", "c")), cfg)
     assert(MarketIncremental.featuresView(spark, st, cfg).count() == got.size)
     // the carry is O(1)/series
-    val v = MarketIncremental.committedVersions(spark, st).last
+    val v = graft.state.CommitLog.versions(spark, st).last
     assert(spark.read.parquet(s"$st/v=$v/carry").count() == 2)
   }
 
@@ -1571,13 +1571,13 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 1 to 35)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st) == Seq(0L))
+    assert(graft.state.CommitLog.versions(spark, st) == Seq(0L))
     drop("b1.json", 36 to 70)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     // nothing new → no batch fires, no state version appears
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.state.CommitLog.versions(spark, st).last == 1L)
     val all = (for (k <- Seq("A", "B"); t <- 1 to 70) yield delta(k, t))
       .toDF("k", "t", "side", "price", "amount")
       .withColumn("ts", expr("timestamp_micros(t)"))
@@ -1590,7 +1590,7 @@ class SystemSpec extends SparkSpec {
       s"streamed snapshots diverged from one-shot (${got.size} vs ${want.size}):\n" +
         s" got ${got.take(3)}\nwant ${want.take(3)}")
     // frontier bounded by standing levels (<= 8 prices x 2 sides x 2 series)
-    val v = MarketIncremental.committedVersions(spark, st).last
+    val v = graft.state.CommitLog.versions(spark, st).last
     assert(spark.read.parquet(s"$st/v=$v/book").count() <= 32)
   }
 
@@ -1634,18 +1634,18 @@ class SystemSpec extends SparkSpec {
       (2L, Seq(0.999, 0.01, 0.0, 0.0)),
       (3L, Seq(0.0, 1.0, 0.0, 0.0))))
     assert(runOnce() == Seq(1L, 3L), "in-batch semantic dup must drop at bootstrap")
-    assert(graft.operators.Similarity.ivfCommittedBatches(spark, idx) == Seq("0"))
+    assert(graft.state.CommitLog.committed(spark, idx) == Seq("0"))
     // batch 1 resumes from the SAME checkpoint (id 1): a cross-batch dup
     // of indexed 3 drops, a novel direction survives and is appended
     drop("b1.json", Seq(
       (10L, Seq(0.01, 0.999, 0.0, 0.0)),
       (11L, Seq(0.0, 0.0, 1.0, 0.0))))
     assert(runOnce() == Seq(11L), "cross-batch semantic dup must drop on resume")
-    assert(graft.operators.Similarity.ivfCommittedBatches(spark, idx).sorted ==
+    assert(graft.state.CommitLog.committed(spark, idx).sorted ==
       Seq("0", "1"))
     // nothing new → no batch, no index growth
     assert(runOnce() == Seq.empty)
-    assert(graft.operators.Similarity.ivfCommittedBatches(spark, idx).sorted ==
+    assert(graft.state.CommitLog.committed(spark, idx).sorted ==
       Seq("0", "1"))
   }
 
