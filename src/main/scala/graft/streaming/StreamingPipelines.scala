@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import org.apache.spark.sql.graft.LzComplexity
 
@@ -24,7 +24,7 @@ object StreamingPipelines {
     * Note the per-batch build computes features within the batch only
     * (parity with the reference's per-poll feature write,
     * `routes.py:858-892`); cross-batch window continuity is the job of
-    * [[statefulTaStream]]. */
+    * [[statefulTa]]. */
   def marketFeaturesStream(spark: SparkSession, inputDir: String,
                            sink: DataFrame => Unit,
                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -151,88 +151,86 @@ object StreamingPipelines {
   }
 
   // ------------------------------------------------------------------
-  // ST3: stateful chunk-carry TA — flatMapGroupsWithState port of
-  // StatefulTAProcessor (`adi/app/features/processors/stateful_processor
-  // .py:11-41`): carry the last (window) rows per series so rolling
-  // windows are continuous across micro-batches.
+  // ST3: chunk carry. The reference's StatefulTAProcessor
+  // (`adi/app/features/processors/stateful_processor.py:11-41`) carries
+  // a buffer from chunk to chunk so rolling features stay continuous
+  // across file boundaries. Five sequential folds have such a streaming
+  // twin: TA (the carry is a window of rows), the Markov regime filter,
+  // LZ76 complexity, GARCH(1,1) variance and the Christoffersen
+  // violation counter (bounded scalar state). Each twin is a pure step
+  // function run through the one [[keyedStepFold]].
   // ------------------------------------------------------------------
+
+  /** The keyed step fold every chunk-carry twin runs on: per key, sort
+    * the micro-batch by `order`, fold it through `step` from the carried
+    * state (`init` for a key not seen before), emit one output per row
+    * and carry the final state to the next micro-batch. The state lives
+    * in Spark's state store, so the fold runs on the default and the
+    * RocksDB provider alike and a restarted query resumes it from its
+    * checkpoint.
+    *
+    * Ordering contract: rows are sorted by `order` within a micro-batch
+    * only. A row older than the carried state is folded after that
+    * state, not in time order, so streaming ≡ batch holds only for
+    * time-ordered cuts (no row of a later micro-batch is older than a
+    * row of an earlier one with the same key). Nothing guards against a
+    * late row. */
+  def keyedStepFold[I, S: Encoder, O: Encoder](ds: Dataset[I])(
+      key: I => String, order: I => Long, init: S)(
+      step: (S, I) => (S, O)): Dataset[O] =
+    ds.groupByKey(key)(Encoders.STRING)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, rows: Iterator[I], state: GroupState[S]) =>
+          var st = state.getOption.getOrElse(init)
+          val out = rows.toIndexedSeq.sortBy(order).map { row =>
+            val (next, o) = step(st, row)
+            st = next
+            o
+          }
+          state.update(st)
+          out.iterator
+      }
 
   case class Bar(symbol: String, epochSec: Long, high: Double, low: Double, close: Double)
   case class TaOut(symbol: String, epochSec: Long, cci: Option[Double], roc: Option[Double])
   case class Carry(rows: List[Bar])
 
-  /** CCI mean-abs-dev + ROC over a full in-memory series — the per-group
-    * kernel (mirrors `_batch_indicators_nb`, `ta_indicators.py:29-57`);
-    * only called on (carry ++ batch) slices, never a whole partition. */
-  def batchIndicators(rows: IndexedSeq[Bar], window: Int,
-                                         constant: Double): IndexedSeq[TaOut] =
-    rows.indices.map { i =>
-      val cci =
-        if (i < window - 1) None
-        else {
-          val tp = (j: Int) => (rows(j).high + rows(j).low + rows(j).close) / 3.0
-          val ma = (i - window + 1 to i).map(tp).sum / window
-          val md = (i - window + 1 to i).map(j => math.abs(tp(j) - ma)).sum / window
-          val cur = tp(i)
-          Some(if (md != 0) (cur - ma) / (constant * md) else 0.0)
-        }
-      val roc =
-        if (i < window) None
-        else Some(100.0 * (rows(i).close - rows(i - window).close) / rows(i - window).close)
-      TaOut(rows(i).symbol, rows(i).epochSec, cci, roc)
-    }
+  /** CCI mean-abs-dev + ROC at row `i` of an in-memory series — the
+    * per-row kernel of `_batch_indicators_nb` (`ta_indicators.py:29-57`).
+    * Reads rows `i - window .. i` only. */
+  def indicatorAt(rows: IndexedSeq[Bar], i: Int, window: Int,
+                  constant: Double): TaOut = {
+    val cci =
+      if (i < window - 1) None
+      else {
+        val tp = (j: Int) => (rows(j).high + rows(j).low + rows(j).close) / 3.0
+        val ma = (i - window + 1 to i).map(tp).sum / window
+        val md = (i - window + 1 to i).map(j => math.abs(tp(j) - ma)).sum / window
+        val cur = tp(i)
+        Some(if (md != 0) (cur - ma) / (constant * md) else 0.0)
+      }
+    val roc =
+      if (i < window) None
+      else Some(100.0 * (rows(i).close - rows(i - window).close) / rows(i - window).close)
+    TaOut(rows(i).symbol, rows(i).epochSec, cci, roc)
+  }
 
-  /** Stateful streaming TA: per symbol, prepend the carried last `window`
-    * rows, compute, emit only the new rows, keep the new tail as carry —
-    * the exact `_carry` protocol of the reference, with Spark managing
-    * state placement/recovery. Proven equivalent to whole-series compute
-    * by the chunk-equivalence spec (§5). */
+  /** The whole-series reference [[statefulTa]] is gated against. */
+  def batchIndicators(rows: IndexedSeq[Bar], window: Int,
+                      constant: Double): IndexedSeq[TaOut] =
+    rows.indices.map(indicatorAt(rows, _, window, constant))
+
+  /** Stateful streaming TA: the carry is the last `window` rows per
+    * symbol — the reference's `_carry` buffer. Each new row is computed
+    * from `carry :+ row`, O(window) per row. */
   def statefulTa(ds: Dataset[Bar], window: Int = 20, constant: Double = 0.015)
                 (implicit spark: SparkSession): Dataset[TaOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[Carry, TaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Bar], state: GroupState[Carry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          val carry = state.getOption.map(_.rows.toIndexedSeq).getOrElse(IndexedSeq.empty)
-          val all = carry ++ batch
-          val out = batchIndicators(all, window, constant).drop(carry.length)
-          state.update(Carry(all.takeRight(window).toList))
-          out.iterator
-      }
-  }
-
-  /** The same chunk-carry protocol on Spark 4's `transformWithState` —
-    * the current stateful API (typed per-key state handles, timers, state
-    * TTL, RocksDB-backed with changelog checkpointing). The carry is a
-    * `ValueState[Carry]`; semantics are identical to [[statefulTa]] and
-    * the equivalence spec drives both implementations through the same
-    * chunked-vs-whole gate. Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
-  class TaCarryProcessor(window: Int, constant: Double)
-      extends StatefulProcessor[String, Bar, TaOut] {
-    @transient private var carry: ValueState[Carry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[Carry]("carry",
-        org.apache.spark.sql.Encoders.product[Carry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[Bar],
-                                 timerValues: TimerValues): Iterator[TaOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      val prev = Option(carry.get()).map(_.rows.toIndexedSeq).getOrElse(IndexedSeq.empty)
-      val all = prev ++ batch
-      val out = batchIndicators(all, window, constant).drop(prev.length)
-      carry.update(Carry(all.takeRight(window).toList))
-      out.iterator
+    keyedStepFold(ds)(_.symbol, _.epochSec, Carry(Nil)) { (c, bar) =>
+      val rows = (c.rows :+ bar).toIndexedSeq
+      (Carry(rows.takeRight(window).toList),
+        indicatorAt(rows, rows.length - 1, window, constant))
     }
-  }
-
-  def statefulTaTws(ds: Dataset[Bar], window: Int = 20, constant: Double = 0.015)
-                   (implicit spark: SparkSession): Dataset[TaOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new TaCarryProcessor(window, constant),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
@@ -262,57 +260,16 @@ object StreamingPipelines {
       case _ => p
     }
 
-  /** Stateful streaming regime filter: per symbol, fold the micro-batch
-    * through [[regimeStep]] from the carried probability, emit one
-    * filtered P(bull) per tick, keep the final probability as carry. */
+  /** Stateful streaming regime filter: [[regimeStep]] per tick from the
+    * carried probability, one filtered P(bull) emitted per tick. */
   def statefulRegime(ds: Dataset[SignTick], a01: Double, a10: Double,
                      u0: Double, u1: Double)
                     (implicit spark: SparkSession): Dataset[RegimeOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[RegimeCarry, RegimeOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[SignTick], state: GroupState[RegimeCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var p = state.getOption.flatMap(_.p)
-          val out = batch.map { t =>
-            p = regimeStep(p, t.sign, a01, a10, u0, u1)
-            RegimeOut(t.symbol, t.epochSec, p)
-          }
-          state.update(RegimeCarry(p))
-          out.iterator
-      }
-  }
-
-  /** [[statefulRegime]] on Spark 4's `transformWithState` (the
-    * [[TaCarryProcessor]] convention: RocksDB-backed ValueState, same
-    * fold, same equivalence gate). */
-  class RegimeCarryProcessor(a01: Double, a10: Double, u0: Double, u1: Double)
-      extends StatefulProcessor[String, SignTick, RegimeOut] {
-    @transient private var carry: ValueState[RegimeCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[RegimeCarry]("regimeCarry",
-        org.apache.spark.sql.Encoders.product[RegimeCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[SignTick],
-                                 timerValues: TimerValues): Iterator[RegimeOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var p = Option(carry.get()).flatMap(_.p)
-      val out = batch.map { t =>
-        p = regimeStep(p, t.sign, a01, a10, u0, u1)
-        RegimeOut(t.symbol, t.epochSec, p)
-      }
-      carry.update(RegimeCarry(p))
-      out.iterator
+    keyedStepFold(ds)(_.symbol, _.epochSec, RegimeCarry(None)) { (c, t) =>
+      val p = regimeStep(c.p, t.sign, a01, a10, u0, u1)
+      (RegimeCarry(p), RegimeOut(t.symbol, t.epochSec, p))
     }
-  }
-
-  def statefulRegimeTws(ds: Dataset[SignTick], a01: Double, a10: Double,
-                        u0: Double, u1: Double)
-                       (implicit spark: SparkSession): Dataset[RegimeOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new RegimeCarryProcessor(a01, a10, u0, u1),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
@@ -330,8 +287,8 @@ object StreamingPipelines {
   /** One step of the Kaspar–Schuster production-complexity scan — the
     * SAME integer/text fold as the batch window function's
     * updateExpressions, so the streaming twin is bit-identical across
-    * any micro-batch cut (the ST3 gate). Null/zero signs carry the
-    * state unchanged. */
+    * any time-ordered micro-batch cut (the ST3 gate). Null/zero signs
+    * carry the state unchanged. */
   def lzStep(st: LzCarry, sign: Option[Double],
              maxTape: Int = LzComplexity.DefaultMaxTape): LzCarry =
     sign match {
@@ -353,67 +310,24 @@ object StreamingPipelines {
     if (st.tape.isEmpty) None
     else Some(st.cnt + (if (st.pstart < st.tape.length) 1 else 0))
 
-  /** Stateful streaming LZ76: per symbol, fold the micro-batch through
-    * [[lzStep]] from the carried (tape, pstart, cnt), emit one running
-    * complexity per tick, keep the final state as carry. */
+  /** Stateful streaming LZ76: [[lzStep]] per tick from the carried
+    * (tape, pstart, cnt), one running complexity emitted per tick. */
   def statefulLz(ds: Dataset[SignTick],
                  maxTape: Int = LzComplexity.DefaultMaxTape)
                 (implicit spark: SparkSession): Dataset[LzOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[LzCarry, LzOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[SignTick], state: GroupState[LzCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var st = state.getOption.getOrElse(LzCarry("", 0, 0))
-          val out = batch.map { t =>
-            st = lzStep(st, t.sign, maxTape)
-            LzOut(t.symbol, t.epochSec, lzEval(st))
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** [[statefulLz]] on Spark 4's `transformWithState` (the
-    * [[RegimeCarryProcessor]] convention: RocksDB-backed ValueState,
-    * same fold, same equivalence gate, same tape budget). */
-  class LzCarryProcessor(maxTape: Int)
-      extends StatefulProcessor[String, SignTick, LzOut] {
-    @transient private var carry: ValueState[LzCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[LzCarry]("lzCarry",
-        org.apache.spark.sql.Encoders.product[LzCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[SignTick],
-                                 timerValues: TimerValues): Iterator[LzOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var st = Option(carry.get()).getOrElse(LzCarry("", 0, 0))
-      val out = batch.map { t =>
-        st = lzStep(st, t.sign, maxTape)
-        LzOut(t.symbol, t.epochSec, lzEval(st))
-      }
-      carry.update(st)
-      out.iterator
+    keyedStepFold(ds)(_.symbol, _.epochSec, LzCarry("", 0, 0)) { (st, t) =>
+      val next = lzStep(st, t.sign, maxTape)
+      (next, LzOut(t.symbol, t.epochSec, lzEval(next)))
     }
-  }
-
-  def statefulLzTws(ds: Dataset[SignTick],
-                    maxTape: Int = LzComplexity.DefaultMaxTape)
-                   (implicit spark: SparkSession): Dataset[LzOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new LzCarryProcessor(maxTape),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
   // Streaming GARCH(1,1) variance filter: the chunk-carry twin of
-  // [[org.apache.spark.sql.graft.GarchVariance]] (every sequential
-  // window function in the engine has a bounded-state streaming twin —
-  // the EWM/Regime/Kalman/LZ76 convention). State is the single double
-  // of the window-function buffer; ω travels WITH each tick, constant
-  // per symbol by contract — variance targeting is a batch estimate a
-  // stream consumes, not something a stream can recompute.
+  // [[org.apache.spark.sql.graft.GarchVariance]]. State is the single
+  // double of the window-function buffer; ω travels WITH each tick,
+  // constant per symbol by contract — variance targeting is a batch
+  // estimate a stream consumes, not something a stream can recompute.
   // ------------------------------------------------------------------
 
   case class VarTick(symbol: String, epochSec: Long, x2: Option[Double],
@@ -424,8 +338,8 @@ object StreamingPipelines {
   /** One step of the GARCH(1,1) recursion — the SAME fixed IEEE tree as
     * the batch window function's updateExpressions, `(ω + α·x²) + β·h`
     * seeded at the first valid square, so the streaming twin is
-    * bit-identical across any micro-batch cut (the ST3 gate). Null
-    * squares carry the state unchanged. */
+    * bit-identical across any time-ordered micro-batch cut (the ST3
+    * gate). Null squares carry the state unchanged. */
   def garchStep(st: GarchCarry, x2: Option[Double], omega: Double,
                 alpha: Double, beta: Double): GarchCarry =
     x2 match {
@@ -436,66 +350,24 @@ object StreamingPipelines {
       case None => st
     }
 
-  /** Stateful streaming GARCH: per symbol, fold the micro-batch through
-    * [[garchStep]] from the carried variance, emit the filtered h per
-    * tick, keep the final state as carry. */
+  /** Stateful streaming GARCH: [[garchStep]] per tick from the carried
+    * variance, the filtered h emitted per tick. */
   def statefulGarch(ds: Dataset[VarTick], alpha: Double, beta: Double)
                    (implicit spark: SparkSession): Dataset[GarchOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[GarchCarry, GarchOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[VarTick], state: GroupState[GarchCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var st = state.getOption.getOrElse(GarchCarry(None))
-          val out = batch.map { t =>
-            st = garchStep(st, t.x2, t.omega, alpha, beta)
-            GarchOut(t.symbol, t.epochSec, st.h)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** [[statefulGarch]] on Spark 4's `transformWithState` (the
-    * [[RegimeCarryProcessor]] convention: RocksDB-backed ValueState,
-    * same fold, same equivalence gate). */
-  class GarchCarryProcessor(alpha: Double, beta: Double)
-      extends StatefulProcessor[String, VarTick, GarchOut] {
-    @transient private var carry: ValueState[GarchCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[GarchCarry]("garchCarry",
-        org.apache.spark.sql.Encoders.product[GarchCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[VarTick],
-                                 timerValues: TimerValues): Iterator[GarchOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var st = Option(carry.get()).getOrElse(GarchCarry(None))
-      val out = batch.map { t =>
-        st = garchStep(st, t.x2, t.omega, alpha, beta)
-        GarchOut(t.symbol, t.epochSec, st.h)
-      }
-      carry.update(st)
-      out.iterator
+    keyedStepFold(ds)(_.symbol, _.epochSec, GarchCarry(None)) { (st, t) =>
+      val next = garchStep(st, t.x2, t.omega, alpha, beta)
+      (next, GarchOut(t.symbol, t.epochSec, next.h))
     }
-  }
-
-  def statefulGarchTws(ds: Dataset[VarTick], alpha: Double, beta: Double)
-                      (implicit spark: SparkSession): Dataset[GarchOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new GarchCarryProcessor(alpha, beta),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
   // Streaming VaR-violation transition counter: the chunk-carry twin
   // of [[graft.operators.Backtest.christoffersenTest]]'s sequential
-  // piece (the EWM/Regime/Kalman/LZ76/GARCH convention — every
-  // order-sensitive fold gets a bounded-state streaming twin). State
-  // is seven integers: the previous indicator and the running
-  // (n, n_viol, n₀₀…n₁₁); `varAlpha` travels WITH each tick — the VaR
-  // threshold is a batch estimate a stream consumes (the GARCH ω
-  // contract), re-fit on a reference window, never recomputed
+  // piece. State is seven integers: the previous indicator and the
+  // running (n, n_viol, n₀₀…n₁₁); `varAlpha` travels WITH each tick —
+  // the VaR threshold is a batch estimate a stream consumes (the GARCH
+  // ω contract), re-fit on a reference window, never recomputed
   // mid-stream. The LR statistics are pure functions of the emitted
   // counts, so count-equivalence across micro-batch cuts IS
   // statistic-equivalence.
@@ -511,9 +383,9 @@ object StreamingPipelines {
 
   /** One step of the violation-transition count — the SAME integer
     * fold as the batch lag + conditional sums, so the twin is
-    * bit-identical across any micro-batch cut (the ST3 gate). Null
-    * values carry the state unchanged (the batch side filters them
-    * before the lag — a null never forms a transition). */
+    * bit-identical across any time-ordered micro-batch cut (the ST3
+    * gate). Null values carry the state unchanged (the batch side
+    * filters them before the lag — a null never forms a transition). */
   def violStep(st: ViolCarry, v: Option[Double], varAlpha: Double): ViolCarry =
     v match {
       case Some(x) =>
@@ -529,57 +401,17 @@ object StreamingPipelines {
       case None => st
     }
 
-  /** Stateful streaming violation counter: per symbol, fold the
-    * micro-batch through [[violStep]] from the carried counts, emit
-    * the running counts per tick, keep the final state as carry. */
+  /** Stateful streaming violation counter: [[violStep]] per tick from
+    * the carried counts, the running counts emitted per tick. */
   def statefulViolations(ds: Dataset[ViolTick])
                         (implicit spark: SparkSession): Dataset[ViolOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[ViolCarry, ViolOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[ViolTick], state: GroupState[ViolCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var st = state.getOption.getOrElse(ViolCarry(-1, 0L, 0L, 0L, 0L, 0L, 0L))
-          val out = batch.map { t =>
-            st = violStep(st, t.v, t.varAlpha)
-            ViolOut(t.symbol, t.epochSec, st.n, st.nViol,
-              st.n00, st.n01, st.n10, st.n11)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** [[statefulViolations]] on Spark 4's `transformWithState` (the
-    * [[RegimeCarryProcessor]] convention: RocksDB-backed ValueState,
-    * same fold, same equivalence gate). */
-  class ViolCarryProcessor
-      extends StatefulProcessor[String, ViolTick, ViolOut] {
-    @transient private var carry: ValueState[ViolCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[ViolCarry]("violCarry",
-        org.apache.spark.sql.Encoders.product[ViolCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[ViolTick],
-                                 timerValues: TimerValues): Iterator[ViolOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var st = Option(carry.get()).getOrElse(ViolCarry(-1, 0L, 0L, 0L, 0L, 0L, 0L))
-      val out = batch.map { t =>
-        st = violStep(st, t.v, t.varAlpha)
-        ViolOut(t.symbol, t.epochSec, st.n, st.nViol,
-          st.n00, st.n01, st.n10, st.n11)
-      }
-      carry.update(st)
-      out.iterator
+    keyedStepFold(ds)(_.symbol, _.epochSec,
+        ViolCarry(-1, 0L, 0L, 0L, 0L, 0L, 0L)) { (st, t) =>
+      val next = violStep(st, t.v, t.varAlpha)
+      (next, ViolOut(t.symbol, t.epochSec, next.n, next.nViol,
+        next.n00, next.n01, next.n10, next.n11))
     }
-  }
-
-  def statefulViolationsTws(ds: Dataset[ViolTick])
-                           (implicit spark: SparkSession): Dataset[ViolOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new ViolCarryProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------

@@ -19,6 +19,22 @@ class SystemSpec extends SparkSpec {
 
   private def tmp(): String = Files.createTempDirectory("graft").toString
 
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` with the session's state store provider set to
+    * `providerClass`, then restores the previous setting. */
+  private def withStateStore[T](providerClass: String)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, providerClass)
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Local HTTP fixture: a JDK HttpServer whose handler script is a
     * per-path queue of (status, body) responses; repeats the last entry
     * once drained. Returns (baseUrl, hitCounter, stop). */
@@ -668,13 +684,10 @@ class SystemSpec extends SparkSpec {
     assert(got == whole, "streaming fold must be bit-identical to the batch window")
   }
 
-  test("streaming: regime-filter transformWithState ≡ batch window function (ST3, Spark-4 API)") {
+  test("streaming: regime-filter fold ≡ batch window (ST3, RocksDB state store)") {
     import StreamingPipelines._
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateStore(RocksDbProvider) {
       val (a01, a10, u0, u1) = (0.04, 0.04, 0.35, 0.65)
       val signs: Seq[Option[Double]] =
         Seq(None, Some(1.0), Some(0.0)) ++
@@ -688,22 +701,17 @@ class SystemSpec extends SparkSpec {
         .as[RegimeOut].collect().sortBy(_.epochSec).toSeq
       implicit val sqlCtx = spark.sqlContext
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SignTick]
-      val q = statefulRegimeTws(mem.toDS(), a01, a10, u0, u1)
-        .writeStream.format("memory").queryName("regime_tws_out")
+      val q = statefulRegime(mem.toDS(), a01, a10, u0, u1)
+        .writeStream.format("memory").queryName("regime_rocksdb_out")
         .outputMode("append").start()
       mem.addData(ticks.take(12): _*)
       q.processAllAvailable()
       mem.addData(ticks.drop(12): _*)
       q.processAllAvailable()
-      val got = spark.table("regime_tws_out").as[RegimeOut].collect()
+      val got = spark.table("regime_rocksdb_out").as[RegimeOut].collect()
         .sortBy(_.epochSec).toSeq
       q.stop()
       assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -755,13 +763,10 @@ class SystemSpec extends SparkSpec {
     assert(e.getMessage.contains("exceeded maxTape=6"), e.getMessage)
   }
 
-  test("streaming: LZ76 transformWithState ≡ batch window function (ST3, Spark-4 API)") {
+  test("streaming: LZ76 fold ≡ batch window function (ST3, RocksDB state store)") {
     import StreamingPipelines._
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateStore(RocksDbProvider) {
       val signs: Seq[Option[Double]] =
         Seq(None, Some(1.0), Some(0.0)) ++
           (1 to 27).map(i => Some(if (i % 3 == 0) -1.0 else 1.0))
@@ -774,22 +779,17 @@ class SystemSpec extends SparkSpec {
         .as[LzOut].collect().sortBy(_.epochSec).toSeq
       implicit val sqlCtx = spark.sqlContext
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SignTick]
-      val q = statefulLzTws(mem.toDS())
-        .writeStream.format("memory").queryName("lz_tws_out")
+      val q = statefulLz(mem.toDS())
+        .writeStream.format("memory").queryName("lz_rocksdb_out")
         .outputMode("append").start()
       mem.addData(ticks.take(13): _*)
       q.processAllAvailable()
       mem.addData(ticks.drop(13): _*)
       q.processAllAvailable()
-      val got = spark.table("lz_tws_out").as[LzOut].collect()
+      val got = spark.table("lz_rocksdb_out").as[LzOut].collect()
         .sortBy(_.epochSec).toSeq
       q.stop()
       assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -838,13 +838,10 @@ class SystemSpec extends SparkSpec {
       "streaming GARCH fold must be bit-identical to the batch window")
   }
 
-  test("streaming: GARCH transformWithState ≡ batch window function (ST3, Spark-4 API)") {
+  test("streaming: GARCH fold ≡ batch window function (ST3, RocksDB state store)") {
     import StreamingPipelines._
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateStore(RocksDbProvider) {
       val xs: Seq[Option[Double]] =
         Seq(None, Some(0.002), None) ++
           (1 to 25).map(i => Some((i % 7).toDouble / 1e3))
@@ -859,22 +856,17 @@ class SystemSpec extends SparkSpec {
         .as[GarchOut].collect().sortBy(_.epochSec).toSeq
       implicit val sqlCtx = spark.sqlContext
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[VarTick]
-      val q = statefulGarchTws(mem.toDS(), 0.08, 0.90)
-        .writeStream.format("memory").queryName("garch_tws_out")
+      val q = statefulGarch(mem.toDS(), 0.08, 0.90)
+        .writeStream.format("memory").queryName("garch_rocksdb_out")
         .outputMode("append").start()
       mem.addData(ticks.take(11): _*)
       q.processAllAvailable()
       mem.addData(ticks.drop(11): _*)
       q.processAllAvailable()
-      val got = spark.table("garch_tws_out").as[GarchOut].collect()
+      val got = spark.table("garch_rocksdb_out").as[GarchOut].collect()
         .sortBy(_.epochSec).toSeq
       q.stop()
       assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -932,63 +924,106 @@ class SystemSpec extends SparkSpec {
       assert((f.n, f.nViol, f.n00, f.n01, f.n10, f.n11) == batchCounts(k),
         s"$k: $f vs ${batchCounts(k)}")
     }
-    // the Spark-4 transformWithState variant folds identically
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // the same fold on the RocksDB state store counts identically
+    withStateStore(RocksDbProvider) {
       val mem2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ViolTick]
-      val q2 = statefulViolationsTws(mem2.toDS())
-        .writeStream.format("memory").queryName("viol_tws_out")
+      val q2 = statefulViolations(mem2.toDS())
+        .writeStream.format("memory").queryName("viol_rocksdb_out")
         .outputMode("append").start()
       mem2.addData(byTime.take(71): _*)
       q2.processAllAvailable()
       mem2.addData(byTime.drop(71): _*)
       q2.processAllAvailable()
-      val fin2 = spark.table("viol_tws_out").as[ViolOut].collect()
+      val fin2 = spark.table("viol_rocksdb_out").as[ViolOut].collect()
         .groupBy(_.symbol).map { case (k, rows) => k -> rows.maxBy(_.epochSec) }
       q2.stop()
       Seq("A", "B").foreach { k =>
         val f = fin2(k)
         assert((f.n, f.nViol, f.n00, f.n01, f.n10, f.n11) == batchCounts(k),
-          s"tws $k: $f vs ${batchCounts(k)}")
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+          s"rocksdb $k: $f vs ${batchCounts(k)}")
       }
     }
   }
 
-  test("streaming: transformWithState chunk-carry ≡ whole-series (ST3, Spark-4 API)") {
+  test("streaming: TA chunk-carry ≡ whole-series (ST3, RocksDB state store)") {
     import StreamingPipelines._
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withStateStore(RocksDbProvider) {
       val bars = (1 to 30).map(i =>
         Bar("S", 1000L + i, i.toDouble + 1, i.toDouble - 1, i.toDouble)).toIndexedSeq
       val whole = batchIndicators(bars, 5, 0.015)
       implicit val sqlCtx = spark.sqlContext
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Bar]
-      val q = statefulTaTws(mem.toDS(), window = 5)
-        .writeStream.format("memory").queryName("ta_tws_out")
+      val q = statefulTa(mem.toDS(), window = 5)
+        .writeStream.format("memory").queryName("ta_rocksdb_out")
         .outputMode("append").start()
       mem.addData(bars.take(20): _*)
       q.processAllAvailable()
       mem.addData(bars.drop(20): _*)
       q.processAllAvailable()
-      val got = spark.table("ta_tws_out").as[TaOut].collect().sortBy(_.epochSec).toSeq
+      val got = spark.table("ta_rocksdb_out").as[TaOut].collect().sortBy(_.epochSec).toSeq
       q.stop()
       assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
+  }
+
+  test("streaming: fold resumes from its checkpoint after a restart (TA, GARCH)") {
+    import StreamingPipelines._
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    // file-drop source + parquet sink + checkpoint: the first query folds
+    // the first cut and stops; a NEW query on the same checkpoint folds
+    // the rest from the recovered state
+    def restarted[I: org.apache.spark.sql.Encoder, O: org.apache.spark.sql.Encoder](
+        first: Seq[I], rest: Seq[I])(fold: org.apache.spark.sql.Dataset[I] =>
+        org.apache.spark.sql.Dataset[O]): Seq[O] = {
+      val (in, out, ckpt) = (tmp(), tmp() + "/out", tmp())
+      Seq(first, rest).zipWithIndex.foreach { case (cut, i) =>
+        cut.toDS().write.parquet(s"$in/cut$i")
+        val q = fold(spark.readStream
+            .schema(implicitly[org.apache.spark.sql.Encoder[I]].schema)
+            .parquet(s"$in/*").as[I])
+          .writeStream.format("parquet").option("checkpointLocation", ckpt)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start(out)
+        assert(q.awaitTermination(120000), s"query over cut $i did not finish")
+      }
+      spark.read.parquet(out).as[O].collect().toSeq
+    }
+    val bars = (1 to 30).map(i =>
+      Bar("S", 1000L + i, i.toDouble + 1, i.toDouble - 1, i.toDouble)).toIndexedSeq
+    val ta = restarted(bars.take(20), bars.drop(20))(statefulTa(_, window = 5))
+    assert(ta.sortBy(_.epochSec) == batchIndicators(bars, 5, 0.015))
+
+    val ticks = (0 until 28).flatMap { i =>
+      val x = if (i % 8 == 0) None else Some((i % 7).toDouble / 1e3)
+      Seq(VarTick("A", 1000L + i, x, 1.5e-3),
+        VarTick("B", 1000L + i, x.map(_ * 0.5), 7.0e-4))
+    }
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("symbol")).orderBy(col("epochSec"))
+    val whole = ticks.toDF("symbol", "epochSec", "x2", "omega")
+      .select(col("symbol"), col("epochSec"),
+        graft.functions.windows.garchVariance(col("x2"), col("omega"),
+          0.08, 0.90, w).as("h"))
+      .as[GarchOut].collect().sortBy(t => (t.symbol, t.epochSec)).toSeq
+    val garch = restarted(ticks.take(22), ticks.drop(22))(statefulGarch(_, 0.08, 0.90))
+    assert(garch.sortBy(t => (t.symbol, t.epochSec)) == whole,
+      "restarted GARCH fold must be bit-identical to the batch window")
+  }
+
+  test("pin: keyedStepFold is the only group-state operator call in src/main") {
+    import scala.jdk.CollectionConverters._
+    val pattern = "(?i)mapGroupsWithState|transformWithState|StatefulProcessor".r
+    val hits = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+          case (line, i) if pattern.findFirstIn(line).nonEmpty =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(hits.size == 1 && hits.head.contains("StreamingPipelines.scala") &&
+      hits.head.contains(".flatMapGroupsWithState["),
+      s"expected exactly the one call in StreamingPipelines.keyedStepFold, got:\n${hits.mkString("\n")}")
   }
 
   test("streaming: file-drop market stream builds features via foreachBatch (ST1)") {
